@@ -49,6 +49,21 @@ def _widen(a: T.DataType, b: T.DataType) -> T.DataType:
     return T.StringType()
 
 
+def is_numeric_widening(src: T.DataType, dst: T.DataType) -> bool:
+    """Whether reading `src` data as `dst` is a numeric promotion up the
+    lattice or a decimal widening that keeps every digit — the casts
+    `_widen` produces other than the collapse to STRING (and nested
+    merges), whose results depend on Spark's cast semantics."""
+    if src in _NUMERIC_ORDER and dst in _NUMERIC_ORDER:
+        return _NUMERIC_ORDER.index(src) < _NUMERIC_ORDER.index(dst)
+    if isinstance(src, T.DecimalType) and isinstance(dst, T.DecimalType):
+        return (
+            dst.scale >= src.scale
+            and dst.precision - dst.scale >= src.precision - src.scale
+        )
+    return False
+
+
 def merge_schemas(current: T.StructType, incoming: T.StructType) -> T.StructType:
     """Union-by-name schema merge: keep current field order, append new
     fields, widen types where both sides have the field."""

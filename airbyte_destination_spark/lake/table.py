@@ -308,6 +308,73 @@ def _file_column_maps(
     return ren, dead
 
 
+@dataclass(frozen=True)
+class _AlignedCol:
+    """Where one target column of a file comes from: an on-disk field
+    (`src`, cast when its type differs from `dtype`), the column's
+    initial default (`has_default`), or NULL."""
+
+    name: str
+    dtype: T.DataType
+    src: T.StructField | None = None
+    default: object = None
+    has_default: bool = False
+
+
+def _file_alignment(
+    m: dict, sid: str, target: T.StructType, stored: bool
+) -> tuple[T.StructType, list[_AlignedCol]]:
+    """The read-side schema-evolution policy for files written under
+    schema `sid`, shared by the Spark reader (`_read_file_group`) and
+    the driver-side point-lookup reader (lake/point_read.py).
+
+    Returns (file_schema, cols): `file_schema` is what the file holds
+    (schema `sid`, `_deleted`, and `_cv` for stored-cv files); `cols`
+    produce `target` (plus `_cv` when stored) in order. Dead lineages
+    (`_file_column_maps`) are never read, so a dropped-then-re-added
+    name cannot resurface prior-life bytes; renamed columns read their
+    on-disk name; a column the file predates reads its initial default
+    (files that have it keep explicit NULLs); type differences are
+    widenings to cast."""
+    cv_field = T.StructField("_cv", T.LongType(), True)
+    file_schema = T.StructType(
+        T.StructType.fromJson(m["schemas"][sid]).fields
+        + [T.StructField(_DELETED_COL, T.BooleanType(), True)]
+        + ([cv_field] if stored else [])
+    )
+    ren, dead = _file_column_maps(
+        m.get("renames"), m.get("adds"), m.get("drops"), sid
+    )
+    by_cur = {
+        ren.get(f.name, f.name): f
+        for f in file_schema.fields
+        if f.name not in dead
+    }
+    defaults = m.get("defaults") or {}
+    cols = []
+    for f in target.fields + ([cv_field] if stored else []):
+        src = by_cur.get(f.name)
+        if src is None and f.name in defaults:
+            cols.append(
+                _AlignedCol(f.name, f.dataType, default=defaults[f.name],
+                            has_default=True)
+            )
+        else:
+            cols.append(_AlignedCol(f.name, f.dataType, src=src))
+    return file_schema, cols
+
+
+def _spark_col(c: _AlignedCol):
+    """`c` as a Spark column over a frame read with the file schema."""
+    if c.src is not None:
+        col = F.col(c.src.name)
+        if c.src.dataType != c.dtype:
+            col = col.cast(c.dtype)
+    else:
+        col = F.lit(c.default if c.has_default else None).cast(c.dtype)
+    return col.alias(c.name)
+
+
 def _resolve_delta(parent: dict, d: dict) -> dict:
     m = {k: v for k, v in d.items() if k not in _DELTA_KEYS}
     buckets = dict(parent["buckets"])
@@ -461,6 +528,9 @@ def bucket_expr(key_cols: list[str], n_buckets: int):
 # literal-fold routing stays plan-bounded; larger probe lists take the
 # distributed path (which read_keys/read_prefix cap anyway)
 _ROUTE_FOLD_MAX = 8192
+# probe lists up to this size push a literal IN list into the scan, and
+# read_keys serves them on the driver when the other rules allow
+_IN_LITERAL_MAX = 256
 
 
 def _route_keys(spark: SparkSession, keys: list, key_dt, n_buckets: int):
@@ -478,6 +548,8 @@ def _route_keys(spark: SparkSession, keys: list, key_dt, n_buckets: int):
     placement and the bloom build use — Python never re-implements the
     hash. Probe lists beyond _ROUTE_FOLD_MAX (or containing NULLs)
     fall back to one distributed projection job."""
+    if not keys:
+        return []
     uniq = []
     seen = set()
     for k in keys:
@@ -963,23 +1035,39 @@ class LakeTable:
         CAN contain a probed key is kept; blooms have no false
         negatives).
 
-        Single-column keys only; `keys` is a list of key values.
+        The surviving files are then served by one of two paths:
+
+        - DRIVER path (lake/point_read.py), when the probe has at most
+          256 keys and no NULL, the manifest sizes of the surviving
+          files sum to at most the session's
+          `spark.sql.autoBroadcastJoinThreshold`, every column the
+          files need cast is a numeric or decimal widening, and no file
+          was written under a LEGACY datetime rebase mode: the files
+          are read with pyarrow (row groups skipped by their key
+          statistics), aligned to the current schema, folded per key
+          in Arrow on MOR tables, and returned as a local relation —
+          `.collect()` launches no Spark job.
+        - SPARK path otherwise: the files are scanned and folded by a
+          distributed plan (`_resolve`), with the IN list pushed into
+          the scan for probes of at most 256 keys and a broadcast semi
+          join against the probe.
+
+        Both return the same rows. Single-column keys only; `keys` is a
+        list of key values.
         """
         m = self.manifest()
         schema = T.StructType.fromJson(m["schemas"][str(m["schema_id"])])
         key_cols = m["key_cols"]
-        if len(key_cols) != 1:
-            raise ValueError("read_keys supports single-column keys")
-        kdf, keys_by_bucket, hashes_by_bucket = self._keys_by_bucket(
-            spark, m, schema, keys
+        keys_by_bucket, pred, entries = self._point_lookup(spark, m, schema, keys)
+        from airbyte_destination_spark.lake import point_read
+
+        local = point_read.read_keys_local(spark, self.root, m, schema, keys, entries)
+        if local is not None:
+            return local
+        pruned = self._resolve(
+            spark, m, sorted(keys_by_bucket), schema, file_pred=pred
         )
-        buckets = sorted(keys_by_bucket)
-        pred = self._point_lookup_pred(
-            keys_by_bucket, hashes_by_bucket,
-            key_type=schema[key_cols[0]].dataType.simpleString(),
-        )
-        pruned = self._resolve(spark, m, buckets, schema, file_pred=pred)
-        if len(keys) <= 256:
+        if len(keys) <= _IN_LITERAL_MAX:
             # third pruning layer: a literal IN predicate reaches the
             # parquet scan as a pushed filter, so ROW GROUPS inside the
             # kept files are skipped by their min/max stats (selective
@@ -989,26 +1077,37 @@ class LakeTable:
             # completeness reason as file pruning. Capped so a huge key
             # list can't bloat the plan with a kilobyte literal.
             pruned = pruned.where(F.col(key_cols[0]).isin(list(keys)))
-        return pruned.join(F.broadcast(kdf), key_cols, "left_semi")
-
-    def _keys_by_bucket(self, spark, m, schema, keys):
-        """(probe kdf, bucket -> keys, bucket -> xxhash64(key)). The
-        hash column rides the same tiny collect the bucket routing
-        already pays, and is the SAME engine expression the bloom
-        build hashes file keys with — Python never re-implements it."""
-        key_cols = m["key_cols"]
-        if len(key_cols) != 1:
-            raise ValueError("point lookups support single-column keys only")
         kdf = spark.createDataFrame(
             [(k,) for k in keys], T.StructType([schema[key_cols[0]]])
         )
+        return pruned.join(F.broadcast(kdf), key_cols, "left_semi")
+
+    def _point_lookup(self, spark, m, schema, keys):
+        """(bucket -> probe keys, file_pred, kept manifest entries) for
+        a point lookup: bucket routing plus the combined zone-map and
+        bloom file predicate. The bloom hashes ride the same tiny
+        collect the bucket routing already pays, and are the SAME
+        engine expression the bloom build hashes file keys with —
+        Python never re-implements it."""
+        key_cols = m["key_cols"]
+        if len(key_cols) != 1:
+            raise ValueError("point lookups support single-column keys only")
         keys_by_bucket: dict[int, list] = {}
         hashes_by_bucket: dict[int, list[int]] = {}
         key_dt = schema[key_cols[0]].dataType
         for k, b, h in _route_keys(spark, keys, key_dt, m["n_buckets"]):
             keys_by_bucket.setdefault(b, []).append(k)
             hashes_by_bucket.setdefault(b, []).append(h)
-        return kdf, keys_by_bucket, hashes_by_bucket
+        pred = self._point_lookup_pred(
+            keys_by_bucket, hashes_by_bucket, key_type=key_dt.simpleString()
+        )
+        entries = [
+            e
+            for b in sorted(keys_by_bucket)
+            for e in m["buckets"].get(str(b), [])
+            if pred(b, e)
+        ]
+        return keys_by_bucket, pred, entries
 
     def scan(
         self,
@@ -1083,7 +1182,7 @@ class LakeTable:
         buckets = sorted(by_bucket)
         pred = _zone_map_pred(by_bucket) if b0 == m["key_cols"][0] else None
         out = self._resolve(spark, m, buckets, schema, file_pred=pred)
-        if len(values) <= 256:
+        if len(values) <= _IN_LITERAL_MAX:
             out = out.where(F.col(b0).isin(list(values)))
         return out.join(F.broadcast(vdf), [b0], "left_semi")
 
@@ -1109,19 +1208,7 @@ class LakeTable:
         tests/EXPLAIN."""
         m = self.manifest()
         schema = T.StructType.fromJson(m["schemas"][str(m["schema_id"])])
-        _, keys_by_bucket, hashes_by_bucket = self._keys_by_bucket(
-            spark, m, schema, keys
-        )
-        pred = self._point_lookup_pred(
-            keys_by_bucket, hashes_by_bucket,
-            key_type=schema[m["key_cols"][0]].dataType.simpleString(),
-        )
-        return [
-            e
-            for b in sorted(keys_by_bucket)
-            for e in m["buckets"].get(str(b), [])
-            if pred(b, e)
-        ]
+        return self._point_lookup(spark, m, schema, keys)[2]
 
     def _point_lookup_pred(
         self,
@@ -2036,40 +2123,13 @@ class LakeTable:
         rows over newer deltas in MOR LWW reads after publish."""
         if not by_group:
             return None
-        cv_field = T.StructField("_cv", T.LongType(), True)
-        target_cv = T.StructType(target.fields + [cv_field])
         parts = []
         for (sid, cv, isbase, stored), paths in by_group.items():
-            fsch = T.StructType(
-                T.StructType.fromJson(m["schemas"][sid]).fields
-                + [T.StructField(_DELETED_COL, T.BooleanType(), True)]
-                + ([cv_field] if stored else [])
+            # stored-cv files keep each row's original commit version
+            # verbatim; the others get a NULL _cv (cv=None)
+            aligned = self._read_file_group(
+                spark, m, sid, None, stored, paths, target
             )
-            df = spark.read.schema(fsch).parquet(*paths)
-            ren, dead = _file_column_maps(
-                m.get("renames"), m.get("adds"), m.get("drops"), sid
-            )
-            stale_cols = [c for c in dead if c in df.columns]
-            if stale_cols:
-                # prior-life force-drop BEFORE the rename projection
-                # (on-disk names) — see _read_buckets
-                df = df.drop(*stale_cols)
-            if ren:
-                df = df.select(
-                    *[F.col(c).alias(ren.get(c, c)) for c in df.columns]
-                )
-            for dc, dv in (m.get("defaults") or {}).items():
-                if dc not in df.columns:
-                    fld = next((f for f in target.fields if f.name == dc), None)
-                    if fld is not None:
-                        df = df.withColumn(dc, F.lit(dv).cast(fld.dataType))
-            if stored:
-                # preserve the per-row original commit version verbatim
-                aligned = align_to_schema(df, target_cv)
-            else:
-                aligned = align_to_schema(df, target).withColumn(
-                    "_cv", F.lit(None).cast("long")
-                )
             parts.append(
                 aligned.withColumn("_scv", F.lit(cv).cast("long"))
                 .withColumn("_sbase", F.lit(1 if isbase else 0))
@@ -2155,6 +2215,9 @@ class LakeTable:
                                     ),
                                     "schema_id": sid_now,
                                     "cv": cv,
+                                    "bytes": os.path.getsize(
+                                        os.path.join(d, fname)
+                                    ),
                                 }
                                 if isbase:
                                     entry["base"] = True
@@ -2419,51 +2482,28 @@ class LakeTable:
         spark: SparkSession,
         m: dict,
         sid: str,
-        cv: int,
+        cv: int | None,
         stored: bool,
         paths: list[str],
         target: T.StructType,
     ) -> DataFrame:
         """Read ONE (schema_id, commit version, stored-cv) file group
-        aligned to `target` plus the `_cv` column — the per-group body
-        of `_read_buckets`, shared with the one-pass CDF reader."""
-        cv_field = T.StructField("_cv", T.LongType(), True)
-        target_cv = T.StructType(target.fields + [cv_field])
-        tgt_types = {f.name: f.dataType for f in target.fields}
-        file_schema = T.StructType(
-            T.StructType.fromJson(m["schemas"][sid]).fields
-            + [T.StructField(_DELETED_COL, T.BooleanType(), True)]
-            + ([cv_field] if stored else [])
-        )
+        aligned to `target` plus the `_cv` column (the stored one, else
+        `cv`) — the per-group body of `_read_buckets`, shared with the
+        one-pass CDF reader and the split re-cut. The alignment policy
+        is `_file_alignment`'s; already-aligned files skip the
+        projection (it only cost analyzer time)."""
+        file_schema, cols = _file_alignment(m, sid, target, stored)
         df = spark.read.schema(file_schema).parquet(*paths)
-        ren, dead = _file_column_maps(
-            m.get("renames"), m.get("adds"), m.get("drops"), sid
-        )
-        stale_cols = [c for c in dead if c in df.columns]
-        if stale_cols:
-            # the file lineage of these on-disk columns was DROPPED
-            # after the file was written: the values are a prior
-            # life — force-dropped BEFORE the rename projection, so
-            # no later rename/re-add can relabel the stale bytes
-            # into the current namespace
-            df = df.drop(*stale_cols)
-        if ren:
+        if [c.src for c in cols] != file_schema.fields or any(
+            c.src.name != c.name or c.src.dataType != c.dtype for c in cols
+        ):
             # ONE projection (not sequential renames): the composed
             # map may reuse freed names (a->b with c->a)
-            df = df.select(
-                *[F.col(c).alias(ren.get(c, c)) for c in df.columns]
-            )
-        for dc, dv in (m.get("defaults") or {}).items():
-            # initial-default evolution: only files whose schema
-            # PREDATES the add read the default; files that have
-            # the column keep explicit NULLs
-            if dc not in df.columns and dc in tgt_types:
-                df = df.withColumn(dc, F.lit(dv).cast(tgt_types[dc]))
+            df = df.select(*[_spark_col(c) for c in cols])
         if stored:
-            return align_to_schema(df, target_cv)
-        return align_to_schema(df, target).withColumn(
-            "_cv", F.lit(cv).cast("long")
-        )
+            return df
+        return df.withColumn("_cv", F.lit(cv).cast("long"))
 
     # ------------------------------------------------------------- write
 

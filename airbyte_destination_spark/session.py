@@ -79,14 +79,15 @@ def get_spark(
         # bigger shuffle write buffer = fewer flush syscalls per task
         .config("spark.shuffle.file.buffer", "1m")
         # v2 file-output commit: task output renames to the destination
-        # at task commit instead of a serial per-file rename loop at job
-        # commit. The engine's manifest is the visibility gate (files
-        # are referenced only after the fsynced manifest commit), so
-        # v1's stricter job-commit atomicity buys nothing here, while
-        # its serial rename loop is a per-commit driver cost that grows
-        # with bucket count (measured ~0.04 s per 8-bucket merge commit
-        # locally; at 64+ buckets on object storage it is the dominant
-        # commit term).
+        # at task commit instead of v1's serial per-file rename loop in
+        # the driver at job commit, a per-commit cost that grows with
+        # bucket count (measured ~0.04 s per 8-bucket merge commit
+        # locally; a 64-file v2-full 2M-row write went 3.9 s -> 0.9 s
+        # at local[32]). Safe for the lake format because the fsynced
+        # snapshot manifest, not the directory, is the real commit:
+        # uncommitted leftovers are never referenced, task attempts
+        # stay under _temporary until commitTask, and speculation is
+        # off.
         .config(
             "spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2"
         )
@@ -100,15 +101,6 @@ def get_spark(
         # threads piled in FileChannelImpl.map0/unmap0; raising the
         # threshold tripled wide-config throughput)
         .config("spark.storage.memoryMapThreshold", "2g")
-        # FileOutputCommitter v1 moves every output file serially in the
-        # driver at job commit — measured as the dominant serial cost of
-        # a 64-file snapshot write (v2-full 2M-row write: 3.9s -> 0.9s at
-        # local[32]). v2 commits files at task commit; safe for the lake
-        # format because the snapshot manifest (not the directory) is the
-        # real commit: uncommitted leftovers are never referenced, task
-        # attempts stay under _temporary until commitTask, and
-        # speculation is off.
-        .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

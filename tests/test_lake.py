@@ -385,12 +385,27 @@ def test_zone_map_file_pruning_point_lookup(spark, tmp_path):
     cand = t.files_for_keys(spark, probe)
     assert len(cand) < len(entries) // 2, (len(cand), len(entries))
     lookup = t.read_keys(spark, probe)
-    # third layer: the literal IN predicate must reach the parquet scan
-    # so row-group min/max stats prune inside the kept files
-    plan = lookup._jdf.queryExecution().executedPlan().toString()
-    assert "In(doc_id" in plan, plan
+    # a small probe over small files is served on the driver
+    assert lookup._jdf.queryExecution().executedPlan().nodeName() == "LocalTableScan"
     got = sorted((r.doc_id, r.payload) for r in lookup.collect())
     assert got == [(2007, "p2-7"), (2042, "p2-42")], got
+    # the Spark path (here: the files exceed the broadcast threshold)
+    # must push the literal IN predicate into the parquet scan so
+    # row-group min/max stats prune inside the kept files
+    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1")
+    try:
+        lookup = t.read_keys(spark, probe)
+        plan = lookup._jdf.queryExecution().executedPlan().toString()
+        assert "In(doc_id" in plan, plan
+        assert sorted((r.doc_id, r.payload) for r in lookup.collect()) == got
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    # above the 256-key cap the Spark path serves the probe (no IN
+    # literal: the semi join alone filters) with the same rows
+    big = t.read_keys(spark, probe + list(range(10**6, 10**6 + 300)))
+    assert big._jdf.queryExecution().executedPlan().nodeName() != "LocalTableScan"
+    assert sorted((r.doc_id, r.payload) for r in big.collect()) == got
     # later update + tombstone of the probed keys must win through the fold
     t.merge(
         spark.createDataFrame([(2042, 99, "NEW", "U"), (2007, 99, None, "D")], s),
@@ -819,7 +834,7 @@ def test_snapshot_tags_pin_reads_and_expiry(spark, tmp_path, monkeypatch):
 
 def test_point_lookup_key_routing_launches_no_spark_job(spark, tmp_path):
     """Round-6 optimization contract: routing a probe key list to
-    buckets (read_keys/_keys_by_bucket) is a projection over a
+    buckets (read_keys/_point_lookup) is a projection over a
     LocalRelation that the optimizer folds driver-side — it must not
     launch a Spark job (it previously paid a full distinct+collect job
     per point lookup)."""
@@ -843,7 +858,7 @@ def test_point_lookup_key_routing_launches_no_spark_job(spark, tmp_path):
     schema = T.StructType.fromJson(m["schemas"][str(m["schema_id"])])
     sc = spark.sparkContext
     sc.setJobGroup("probe-routing", "probe-routing")
-    _, by_bucket, hashes = t._keys_by_bucket(spark, m, schema, [1, 2, 3, 2])
+    by_bucket, _, _ = t._point_lookup(spark, m, schema, [1, 2, 3, 2])
     jobs = sc.statusTracker().getJobIdsForGroup("probe-routing")
     sc.setJobGroup(None, None)
     assert sum(len(v) for v in by_bucket.values()) == 3  # deduped
